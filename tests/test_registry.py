@@ -1,44 +1,47 @@
-"""Registry integrity: the certification front must be real queries.
+"""Registry integrity: the driver window must be real queries.
 
-Round 3 shipped 12 CERTIFICATION_FRONT names with no implementation —
+Round 3 shipped 12 hand-pinned front names with no implementation —
 ``certification_order()`` silently dropped them, so the intended first-50
-pinning was partly a no-op and nobody noticed until the driver ran. These
-tests (plus the import-time guard in ``plans/__init__.py``) make that
-class of drift fail loudly."""
+pinning was partly a no-op and nobody noticed until the driver ran. The
+window is now derived from the registry itself; these tests keep it a
+window of distinct, registered queries."""
 
 from __future__ import annotations
 
 from mk_kafka_connect_spark.plans import (
-    CERTIFICATION_FRONT,
+    DRIVER_WINDOW,
     QUERIES,
     certification_order,
     oracle_queries,
     spark_queries,
 )
+from mk_kafka_connect_spark.plans.fingerprints import load_ledger
 
 
 def test_front_names_all_registered():
-    missing = set(CERTIFICATION_FRONT) - set(QUERIES)
-    assert not missing, f"CERTIFICATION_FRONT entries not in registry: {sorted(missing)}"
+    window = certification_order()[:DRIVER_WINDOW]
+    missing = set(window) - set(QUERIES)
+    assert not missing, f"window entries not in registry: {sorted(missing)}"
 
 
 def test_front_has_no_duplicates():
-    assert len(CERTIFICATION_FRONT) == len(set(CERTIFICATION_FRONT))
+    window = certification_order()[:DRIVER_WINDOW]
+    assert len(window) == len(set(window))
 
 
 def test_certification_order_is_a_permutation_of_registry():
     order = certification_order()
     assert sorted(order) == sorted(QUERIES)
-    assert order[: len(CERTIFICATION_FRONT)] == list(CERTIFICATION_FRONT)
 
 
 def test_driver_window_covers_all_tpch_queries():
-    """The 12 r3/r4 TPC-H queries must sit inside the driver's first-50
-    certification window to get their first driver row this round."""
-    window = set(certification_order()[:50])
+    """A TPC-H query with no driver evidence yet must sit inside the
+    driver's certification window to get its first driver row."""
+    window = set(certification_order()[:DRIVER_WINDOW])
+    ledger = load_ledger()
     tpch = {n for n in QUERIES if n.startswith("q") and "_" in n}
-    front_tpch = {n for n in CERTIFICATION_FRONT if n in tpch}
-    assert front_tpch <= window
+    uncertified_tpch = {n for n in tpch if n not in ledger}
+    assert uncertified_tpch <= window
 
 
 def test_exposed_dicts_follow_certification_order():

@@ -1,236 +1,102 @@
-"""Guard the driver-certification rotation (round 18).
+"""Invariants of the driver-certification rotation.
 
-The driver hash-checks only the FIRST 50 entries of the exposed query
-dict per round. CORRECTNESS_r17 certified exactly ``_r17_front()``
-50/50 green — consuming the 9 stale-by-code R16_REWRITTEN_RECERTS, the
-11 never-certified R16_ADDITIONS, and 30 r8-pool backfills. The r18
-front pins the 37-query priority head — the 11 R18_STALE_HEAD (the
-r8-pool leftover: the last queries anywhere with 8-round-old
-evidence), the 19 stale-by-code R17_REWRITTEN_RECERTS, and the 7
-never-certified R17_ADDITIONS — then backfills its 13 remaining slots
-from the 49-query r9-evidence pool. The 30 pool queries that do not
-fit are pinned as R19_STALE_POOL so the r9 pool provably drains to
-zero next round. Every pool is recomputed here from the artifact
-files so the pin cannot drift.
+The driver hash-checks only the first ``DRIVER_WINDOW`` entries of the
+exposed query dict per round. ``certification_order()`` derives that
+order from the fingerprint ledger (QUERY_FINGERPRINTS.json): stale
+queries (drifted or never ledgered) before clean ones, oldest evidence
+first, then registration order. These tests pin the rule, not any
+particular round's window, so they hold after every ledger refresh.
 """
 
 from __future__ import annotations
 
-import json
-import os
-import re
+import pytest
 
-import __spark_entry__  # noqa: F401  (registers every query)
+from mk_kafka_connect_spark.plans import fingerprints as FP
 from mk_kafka_connect_spark.plans.registry import (
-    CERTIFICATION_FRONT,
     DRIVER_WINDOW,
     QUERIES,
-    R8_STALE_FILL,
-    R9_STALE_FILL,
-    R17_ADDITIONS,
-    R17_REWRITTEN_RECERTS,
-    R18_ADDITIONS,
-    R18_REWRITTEN_RECERTS,
-    R18_STALE_HEAD,
-    R19_STALE_POOL,
-    _r17_front,
+    _head_fingerprints,
     certification_order,
 )
 
-REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
-# Artifacts that existed when the r18 front was pinned (r1..r17; the r7
-# and r12 drivers never ran, so those files are legitimately absent).
-# Later rounds append artifacts; the derivation stays frozen on this
-# evidence.
-_PRE_R18_ARTIFACTS = tuple(
-    f"CORRECTNESS_r{n:02d}.json" for n in range(1, 18)
-)
+@pytest.fixture(scope="module")
+def ledger():
+    return FP.load_ledger()
 
 
-def _latest_green_round() -> dict[str, int]:
-    latest: dict[str, int] = {}
-    for fname in _PRE_R18_ARTIFACTS:
-        path = os.path.join(REPO, fname)
-        if not os.path.exists(path):
-            continue
-        rnd = int(re.search(r"r(\d+)", fname).group(1))
-        with open(path) as f:
-            rows = json.load(f)
-        for name, row in rows.items():
-            if not isinstance(row, dict):
-                continue
-            ok = (
-                row.get("rows_match")
-                and row.get("schema_match") is not False
-                and row.get("hash_match") in (True, None)
-                and not row.get("err")
-            )
-            if ok:
-                latest[name] = max(latest.get(name, 0), rnd)
-    return latest
+@pytest.fixture(scope="module")
+def stale(ledger):
+    return set(FP.drifted(ledger))
 
 
-def test_r17_window_matches_r17_front():
-    # The premise of the rotation: the r17 driver certified exactly the
-    # pinned _r17_front() set, all green.
-    path = os.path.join(REPO, "CORRECTNESS_r17.json")
-    with open(path) as f:
-        rows = json.load(f)
-    assert set(rows) == set(_r17_front())
-    bad = {
-        n: r
-        for n, r in rows.items()
-        if not (r.get("rows_match") and r.get("schema_match") and not r.get("err"))
-    }
-    assert not bad, f"r17 rows not green: {sorted(bad)}"
-
-
-def test_orphan_pool_is_exactly_r17_additions():
-    # The only queries with no driver row ever are the 7 round-17
-    # additions (plus this round's own additions, queued for r19); the
-    # r18 head carries every one of them.
-    latest = _latest_green_round()
-    orphans = [n for n in QUERIES if n not in latest]
-    expected = list(R17_ADDITIONS) + list(R18_ADDITIONS)
-    assert sorted(orphans) == sorted(expected), (
-        f"orphan pool drifted from evidence: "
-        f"missing={sorted(set(orphans) - set(expected))} "
-        f"extra={sorted(set(expected) - set(orphans))}"
-    )
-    assert set(R17_ADDITIONS) <= set(CERTIFICATION_FRONT)
-
-
-def test_r8_pool_leftover_is_exactly_r18_stale_head():
-    # After the r17 fill consumed 30, the queries whose newest green
-    # row is still round 8 are exactly the 11-query R18_STALE_HEAD —
-    # the r18 window retires the last 8-round-old evidence.
-    latest = _latest_green_round()
-    r8 = [n for n in QUERIES if latest.get(n) == 8]
-    assert r8 == list(R18_STALE_HEAD), (
-        f"r8 leftover pool drifted from evidence: "
-        f"missing={sorted(set(r8) - set(R18_STALE_HEAD))} "
-        f"extra={sorted(set(R18_STALE_HEAD) - set(r8))}"
-    )
-    assert len(r8) == 11
-    assert set(R18_STALE_HEAD) <= set(CERTIFICATION_FRONT)
-
-
-def test_r9_pool_matches_artifacts():
-    # R9_STALE_FILL is exactly the queries whose newest green row is
-    # round 9 — after r17 consumed the r8 backfills, the oldest
-    # evidence anywhere — in registration order.
-    latest = _latest_green_round()
-    r9 = [n for n in QUERIES if latest.get(n) == 9]
-    assert r9 == list(R9_STALE_FILL), (
-        f"r9 pool drifted from evidence: "
-        f"missing={sorted(set(r9) - set(R9_STALE_FILL))} "
-        f"extra={sorted(set(R9_STALE_FILL) - set(r9))}"
-    )
-    assert len(r9) == 49
-
-
-def test_front_is_priority_head_then_r9_fill():
-    head = list(R18_STALE_HEAD)
-    head += [n for n in R17_REWRITTEN_RECERTS if n not in head]
-    head += [n for n in R17_ADDITIONS if n not in head]
-    assert len(head) == 37
-    fill = [n for n in R9_STALE_FILL if n not in head]
-    expected = tuple((head + fill)[:DRIVER_WINDOW])
-    assert CERTIFICATION_FRONT == expected
-    # The priority head must never be displaced by fill.
-    assert list(CERTIFICATION_FRONT[: len(head)]) == head
+def _round(ledger, name):
+    row = ledger.get(name)
+    return -1 if row is None else row["evidence_round"]
 
 
 def test_front_fills_driver_window_exactly():
-    # A short front silently promotes registration-order filler into the
-    # window; a long front silently drops its own tail. Pin it to 50.
-    assert len(CERTIFICATION_FRONT) == DRIVER_WINDOW
-    assert len(set(CERTIFICATION_FRONT)) == DRIVER_WINDOW
-    dangling = [n for n in CERTIFICATION_FRONT if n not in QUERIES]
-    assert not dangling, f"front names not in registry: {dangling}"
-    dangling = [
-        n
-        for n in (
-            *R17_ADDITIONS,
-            *R17_REWRITTEN_RECERTS,
-            *R18_STALE_HEAD,
-            *R9_STALE_FILL,
-            *R19_STALE_POOL,
-        )
-        if n not in QUERIES
-    ]
-    assert not dangling, f"pinned names not in registry: {dangling}"
+    # A short window silently wastes driver seats; a duplicate or an
+    # unregistered name silently drops one.
+    window = certification_order()[:DRIVER_WINDOW]
+    assert len(window) == DRIVER_WINDOW
+    assert len(set(window)) == DRIVER_WINDOW
+    dangling = [n for n in window if n not in QUERIES]
+    assert not dangling, f"window names not in registry: {dangling}"
 
 
-def test_front_differs_from_r17_window():
-    # The r5/r6 (and again r11) failure mode: two rounds burned the
-    # driver window on the same 50 names. Nothing in the r18 window may
-    # repeat the r17 window — the 19 stale-by-code re-certs were staled
-    # by post-window code changes and hold zero r17 seats by
-    # construction (tools/fingerprints.py refresh consumed the seated
-    # ones).
-    repeats = set(_r17_front()) & set(CERTIFICATION_FRONT)
-    assert not repeats, (
-        f"r18 front repeats r17 window: {sorted(repeats)}"
-    )
-
-
-def test_r19_stale_pool_drains_the_r9_pool():
-    # R19_STALE_POOL must be exactly the r9-pool queries the r18
-    # window does not consume — 30 queries, all scheduled for the r19
-    # window head so the r9 pool is gone next round (VERDICT r17 #4).
-    expected = tuple(
-        n for n in R9_STALE_FILL if n not in set(CERTIFICATION_FRONT)
-    )
-    assert R19_STALE_POOL == expected
-    assert len(R19_STALE_POOL) == 30
-    latest = _latest_green_round()
-    for n in R19_STALE_POOL:
-        assert latest.get(n) == 9
-
-
-def test_stale_overflow_queues_directly_behind_window():
-    # r19 priority: the r9-pool leftover first, then this round's
-    # stale-by-code re-certs, then its never-certified additions.
+def test_stale_overflow_queues_directly_behind_window(stale):
+    # Every stale query precedes every clean query, so the stale queries
+    # that do not fit the window take the next seats, ahead of any query
+    # whose evidence is current.
     order = certification_order()
-    front = set(CERTIFICATION_FRONT)
-    overflow: list[str] = []
-    for n in (*R19_STALE_POOL, *R18_REWRITTEN_RECERTS, *R18_ADDITIONS):
-        if n in QUERIES and n not in front and n not in overflow:
-            overflow.append(n)
-    behind = order[DRIVER_WINDOW : DRIVER_WINDOW + len(overflow)]
-    assert behind == overflow, "stale overflow must head the r19 queue"
+    assert set(order[: len(stale)]) == stale, (
+        "a clean query is ordered ahead of a stale one: "
+        f"{sorted(set(order[: len(stale)]) - stale)}"
+    )
 
 
-def test_r17_rewritten_recerts_have_older_rows_and_ride_the_window():
-    # Membership criterion: a driver row exists, but round-17 code
-    # changes touched the query (or a helper it calls) after it. The
-    # set is derived mechanically by tests/test_stale_by_code.py from
-    # the QUERY_FINGERPRINTS.json ledger; here we pin that every
-    # member has prior evidence and a seat in the window.
-    latest = _latest_green_round()
-    for n in R17_REWRITTEN_RECERTS:
-        assert n in QUERIES
-        assert n in set(CERTIFICATION_FRONT)
-        assert latest.get(n), f"{n} has no driver row — belongs in additions"
+def test_stale_block_puts_oldest_evidence_first(ledger, stale):
+    # Never-ledgered queries have no driver row at all: they count as
+    # the oldest evidence and lead the order.
+    block = certification_order()[: len(stale)]
+    rounds = [_round(ledger, n) for n in block]
+    assert rounds == sorted(rounds)
 
 
-def test_r8_pool_retired():
-    # After the r18 pin, every R8_STALE_FILL member either holds newer
-    # evidence (r16/r17 fills) or a seat in the r18 window — no query
-    # with 8-round-old evidence survives the round.
-    latest = _latest_green_round()
-    stranded = [
-        n
-        for n in R8_STALE_FILL
-        if latest.get(n) == 8 and n not in set(CERTIFICATION_FRONT)
-    ]
-    assert not stranded, f"r8-era evidence with no r18 seat: {stranded}"
+def test_clean_queries_ordered_by_evidence_round(ledger, stale):
+    clean = certification_order()[len(stale) :]
+    rounds = [_round(ledger, n) for n in clean]
+    assert rounds == sorted(rounds)
+
+
+def test_ties_keep_registration_order(ledger, stale):
+    position = {n: i for i, n in enumerate(QUERIES)}
+    order = certification_order()
+    for a, b in zip(order, order[1:]):
+        if (a in stale, _round(ledger, a)) == (b in stale, _round(ledger, b)):
+            assert position[a] < position[b], (a, b)
 
 
 def test_window_queries_all_have_oracles():
-    # Every r18 window query claims a full DuckDB value-hash oracle —
-    # a rows-only driver row would not discharge the certification debt.
-    missing = [n for n in CERTIFICATION_FRONT if QUERIES[n].oracle is None]
+    # A rows-only driver row would not discharge the certification debt.
+    window = certification_order()[:DRIVER_WINDOW]
+    missing = [n for n in window if QUERIES[n].oracle is None]
     assert not missing, f"window queries without oracle SQL: {missing}"
+
+
+def test_window_rotates_after_certification(ledger):
+    # Certify the window the way `fingerprints.py refresh` would (HEAD
+    # fingerprints at a new evidence round) and re-derive: the next
+    # window must not spend a single seat on the queries just certified.
+    window = certification_order()[:DRIVER_WINDOW]
+    head = _head_fingerprints()
+    next_round = max(row["evidence_round"] for row in ledger.values()) + 1
+    refreshed = dict(ledger)
+    for name in window:
+        refreshed[name] = {"fingerprint": head[name], "evidence_round": next_round}
+    nxt = certification_order(refreshed)[:DRIVER_WINDOW]
+    assert len(nxt) == DRIVER_WINDOW
+    repeats = set(window) & set(nxt)
+    assert not repeats, f"next window repeats certified queries: {sorted(repeats)}"

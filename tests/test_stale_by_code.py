@@ -11,15 +11,11 @@ caught even when the query body is untouched).
 
 The ledger was bootstrapped at commit 22a1fc2 — the exact code the r16
 driver certified — and re-stamped each round from the new CORRECTNESS
-artifact (r17: the 50-query window, refreshed at the unchanged
-end-of-r17 code the driver ran). Any
-query whose HEAD fingerprint differs from its ledgered one has
-certification evidence from older code and MUST hold a pending
-re-certification seat: the r18 window (CERTIFICATION_FRONT), the
-staged r19 queue (R19_STALE_POOL), this round's derived recert list
-(R18_REWRITTEN_RECERTS), or — for brand-new queries — R18_ADDITIONS.
-Forgetting to queue a touched query now fails CI instead of waiting
-for a judge to notice.
+artifact. Any query whose HEAD fingerprint differs from its ledgered
+one has certification evidence from older code and MUST be ordered in
+the stale block at the head of ``certification_order()``, ahead of
+every clean query, so it takes a driver seat before any query whose
+evidence is current.
 
 End-of-round, ``python tools/fingerprints.py refresh`` re-stamps the
 queries the new CORRECTNESS artifact certified (and the bootstrap rule
@@ -29,69 +25,42 @@ re-runs after the round's strict-parity gate).
 from __future__ import annotations
 
 import os
-import sys
 
-import __spark_entry__  # noqa: F401  (registers every query)
-from mk_kafka_connect_spark.plans.registry import (
-    CERTIFICATION_FRONT,
-    QUERIES,
-    R17_ADDITIONS,
-    R18_ADDITIONS,
-    R18_REWRITTEN_RECERTS,
-    R19_REWRITTEN_RECERTS,
-    R19_STALE_POOL,
-)
+import pytest
+
+from mk_kafka_connect_spark.plans import fingerprints
+from mk_kafka_connect_spark.plans.registry import QUERIES, certification_order
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-sys.path.insert(0, os.path.join(REPO, "tools"))
-
-import fingerprints  # noqa: E402
 
 
-def test_ledger_covers_every_query():
+@pytest.fixture(scope="module")
+def drifted():
+    return fingerprints.drifted()
+
+
+def test_ledger_covers_every_query(drifted):
     ledger = fingerprints.load_ledger()
     assert ledger, "QUERY_FINGERPRINTS.json missing — run fingerprints.py bootstrap"
-    unledgered = [
-        n
-        for n in QUERIES
-        if n not in ledger
-        and n not in set(R17_ADDITIONS)
-        and n not in set(R18_ADDITIONS)
-    ]
+    stale_block = set(certification_order()[: len(drifted)])
+    unledgered = [n for n in QUERIES if n not in ledger and n not in stale_block]
     assert not unledgered, (
-        f"queries with no ledgered fingerprint and no addition seat: "
-        f"{unledgered}"
+        f"queries with no ledgered fingerprint ordered outside the stale "
+        f"block: {unledgered}"
     )
 
 
-def test_drifted_queries_hold_a_pending_recert_seat():
-    pending = (
-        set(CERTIFICATION_FRONT)
-        | set(R19_STALE_POOL)
-        | set(R18_REWRITTEN_RECERTS)
-        | set(R19_REWRITTEN_RECERTS)
-        | set(R18_ADDITIONS)
-    )
+def test_drifted_queries_hold_a_pending_recert_seat(drifted):
+    # Every drifted() query precedes every non-stale query.
+    order = certification_order()
     stranded = {
         name: row["reason"]
-        for name, row in fingerprints.drifted().items()
-        if name not in pending
+        for name, row in drifted.items()
+        if order.index(name) >= len(drifted)
     }
     assert not stranded, (
-        "stale-by-code queries with no pending re-certification seat "
-        f"(add them to R18_REWRITTEN_RECERTS): {sorted(stranded)}"
-    )
-
-
-def test_recert_list_members_actually_drifted():
-    # The inverse guard — the r16 failure mode of listing an untouched
-    # query. A seat in R18_REWRITTEN_RECERTS asserts the code changed;
-    # if the fingerprint still matches the ledger, the listing is wrong
-    # (or the ledger refresh already consumed it — then drop the seat).
-    drifted = set(fingerprints.drifted())
-    phantom = [n for n in R18_REWRITTEN_RECERTS if n not in drifted]
-    assert not phantom, (
-        f"R18_REWRITTEN_RECERTS entries whose code never drifted: {phantom}"
+        "stale-by-code queries ordered behind a clean query in "
+        f"certification_order(): {sorted(stranded)}"
     )
 
 

@@ -1,33 +1,11 @@
-"""Source fingerprints for every registered query — the mechanical
-stale-by-code detector (ADVICE r16, medium).
+"""Maintain QUERY_FINGERPRINTS.json, the stale-by-code ledger.
 
-Round 16's hand-typed R16_REWRITTEN_RECERTS list both included a query
-the diff never touched (streaming_topk_per_window) and omitted one it
-did (cdc_incremental_cron_replay, whose backing helper
-_run_incremental_cron_replay received the materialize_result swap).
-Hand-derived stale-by-code lists cannot be trusted; this module derives
-them.
-
-A query's fingerprint is a SHA-256 over the concatenated sources of:
-
-- the query function itself (``inspect.getsource`` includes the
-  ``@query(...)`` decorator text, so the oracle SQL and tags are
-  covered for free), and
-- transitively, every function / class defined inside the
-  ``mk_kafka_connect_spark`` package that the query's code references
-  by name — resolved through the module globals, following one
-  ``Attribute`` hop for module aliases (``SW.run_to_memory``) and
-  class methods. This is exactly the closure that bit round 16: the
-  query body was untouched but a shared helper changed.
-
-``QUERY_FINGERPRINTS.json`` at the repo root is the ledger: for each
-query, the fingerprint its newest driver-certified (or, at bootstrap,
-builder-certified) code had, plus the evidence round. The guard test
-``tests/test_stale_by_code.py`` recomputes HEAD fingerprints and fails
-if any query drifted from its ledgered fingerprint without sitting in
-the pending re-certification set (CERTIFICATION_FRONT or the staged
-r18 queue) — so a changed query can no longer silently keep a green
-driver row from old code.
+The tracer and the ledger reader live in
+``mk_kafka_connect_spark/plans/fingerprints.py``; this script holds the
+commands that write the ledger. ``registry.certification_order()`` puts
+every query whose HEAD fingerprint differs from its ledgered one (or that
+was never ledgered) ahead of the clean ones, oldest evidence first, so a
+refresh after a driver round is all it takes to rotate the driver window.
 
 Refresh after a driver round with::
 
@@ -36,251 +14,47 @@ Refresh after a driver round with::
 
 which re-stamps only the queries that round actually certified.
 ``python tools/fingerprints.py check`` prints the drift report.
+
+After a tracer upgrade, ``dump`` the fingerprints at the evidence commit
+with HEAD's ``plans/fingerprints.py`` and ``rebase`` the ledger onto them.
+A dump records the commit it ran at and the tracer version (SHA-256 of
+``plans/fingerprints.py``); ``rebase`` refuses a dump from another tracer.
 """
 
 from __future__ import annotations
 
-import ast
 import hashlib
-import importlib
-import importlib.util
-import inspect
 import json
 import os
-import re
+import subprocess
 import sys
-import textwrap
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, REPO)
 
-LEDGER = os.path.join(REPO, "QUERY_FINGERPRINTS.json")
-PACKAGE = "mk_kafka_connect_spark"
+from mk_kafka_connect_spark.plans import fingerprints as FP  # noqa: E402
 
 
-def _source(obj) -> str | None:
+def tracer_version() -> str:
+    with open(FP.__file__, "rb") as f:
+        return hashlib.sha256(f.read()).hexdigest()
+
+
+def _git_commit() -> str:
     try:
-        return textwrap.dedent(inspect.getsource(obj))
-    except (OSError, TypeError):
-        return None
+        out = subprocess.run(
+            ["git", "rev-parse", "HEAD"],
+            cwd=REPO, capture_output=True, text=True, check=True,
+        )
+    except (OSError, subprocess.CalledProcessError):
+        return "unknown"
+    return out.stdout.strip()
 
 
-def _in_package(obj) -> bool:
-    mod = getattr(obj, "__module__", None)
-    return bool(mod) and (mod == PACKAGE or mod.startswith(PACKAGE + "."))
-
-
-def _referenced_names(tree: ast.AST) -> list[tuple[str, str | None]]:
-    """(name, attr) pairs referenced in ``tree``.
-
-    ``(name, None)`` for bare ``Name`` loads; ``(base, attr)`` for
-    single-hop ``base.attr`` attribute loads (module aliases like
-    ``SW.run_to_memory`` and class attributes).
-    """
-    pairs: list[tuple[str, str | None]] = []
-    for node in ast.walk(tree):
-        if isinstance(node, ast.Name) and isinstance(node.ctx, ast.Load):
-            pairs.append((node.id, None))
-        elif isinstance(node, ast.Attribute) and isinstance(node.value, ast.Name):
-            pairs.append((node.value.id, node.attr))
-    return pairs
-
-
-def _import_module(name: str):
-    """Resolve a module by name; import only in-package modules.
-
-    Everything under ``mk_kafka_connect_spark`` is already importable
-    (and normally already imported via ``__spark_entry__``); anything
-    else is looked up in ``sys.modules`` only, because out-of-package
-    objects are filtered by ``_in_package`` anyway.
-    """
-    mod = sys.modules.get(name)
-    if mod is None and (name == PACKAGE or name.startswith(PACKAGE + ".")):
-        try:
-            mod = importlib.import_module(name)
-        except Exception:
-            return None
-    return mod
-
-
-def _local_import_namespace(obj, tree: ast.AST) -> dict[str, object]:
-    """name -> object for imports INSIDE ``obj``'s source (ADVICE r18).
-
-    Queries frequently do ``from ..operators.x import helper`` inside
-    the function body; those bindings are invisible to module globals
-    and closure cells, so the round-18 tracer silently skipped them
-    (``multimodal_ahash_neardup`` et al. kept green fingerprints while
-    their operators changed). Walk Import/ImportFrom nodes and resolve
-    them the way the interpreter would, relative to the function's own
-    module, so locally imported helpers join the closure.
-    """
-    ns: dict[str, object] = {}
-    mod_name = getattr(obj, "__module__", "") or ""
-    mod = sys.modules.get(mod_name)
-    pkg = getattr(mod, "__package__", None) or mod_name.rpartition(".")[0]
-    for node in ast.walk(tree):
-        if isinstance(node, ast.Import):
-            for alias in node.names:
-                if alias.asname:
-                    target = _import_module(alias.name)
-                    if target is not None:
-                        ns[alias.asname] = target
-                else:
-                    top = alias.name.split(".")[0]
-                    _import_module(alias.name)  # ensure submodule attrs exist
-                    target = _import_module(top)
-                    if target is not None:
-                        ns[top] = target
-        elif isinstance(node, ast.ImportFrom):
-            if node.level:
-                rel = "." * node.level + (node.module or "")
-                try:
-                    resolved = importlib.util.resolve_name(rel, pkg)
-                except (ImportError, ValueError):
-                    continue
-            else:
-                resolved = node.module or ""
-            from_mod = _import_module(resolved)
-            if from_mod is None:
-                continue
-            for alias in node.names:
-                target = getattr(from_mod, alias.name, None)
-                if target is None:
-                    target = _import_module(f"{resolved}.{alias.name}")
-                if target is not None:
-                    ns[alias.asname or alias.name] = target
-    return ns
-
-
-def _closure_sources(fn) -> dict[str, str]:
-    """name -> source for fn plus its in-package reference closure.
-
-    Names resolve through the function's module globals, its closure
-    cells (``co_freevars``) — registry queries are typically defined
-    inside ``_register_*`` wrapper functions, so helpers they call
-    (round 17's first miss: ``cosine_topk_bruteforce`` inside
-    ``sim_knn_loo_eval``) arrive as cell references, not globals — and
-    imports written INSIDE the function body (round 18's miss:
-    ``from ..operators.multimodal import ahash_near_dups`` in the query
-    body left the operator outside the fingerprint)."""
-    sources: dict[str, str] = {}
-    seen: set[int] = set()
-    # (qualifier, object) worklist; qualifier is a stable display name.
-    stack: list[tuple[str, object]] = [(fn.__qualname__, fn)]
-    while stack:
-        qual, obj = stack.pop()
-        if id(obj) in seen:
-            continue
-        seen.add(id(obj))
-        src = _source(obj)
-        if src is None:
-            continue
-        key = f"{getattr(obj, '__module__', '?')}.{qual}"
-        sources[key] = src
-        try:
-            tree: ast.AST | None = ast.parse(src)
-        except SyntaxError:
-            tree = None
-        if tree is None:
-            continue
-        glb = dict(getattr(obj, "__globals__", None) or {})
-        if not glb:  # a class: resolve names through its module
-            mod = sys.modules.get(getattr(obj, "__module__", ""), None)
-            glb = dict(getattr(mod, "__dict__", {}))
-        cells = getattr(obj, "__closure__", None)
-        if cells:
-            for cname, cell in zip(obj.__code__.co_freevars, cells):
-                try:
-                    glb[cname] = cell.cell_contents
-                except ValueError:  # empty cell
-                    continue
-        # Function-local imports shadow globals inside the body.
-        glb.update(_local_import_namespace(obj, tree))
-        for name, attr in _referenced_names(tree):
-            target = glb.get(name)
-            if target is None:
-                continue
-            if attr is not None:
-                target = getattr(target, attr, None)
-                if target is None:
-                    continue
-            # unwrap plain module aliases only via the attr hop above
-            if inspect.isfunction(target) or inspect.isclass(target):
-                if _in_package(target):
-                    stack.append((getattr(target, "__qualname__", name), target))
-    return sources
-
-
-# Dynamic registry composition: queries like the recall/ndcg reports
-# call other queries via QUERIES["name"].fn and interpolate their
-# .oracle into an f-string at registration time — neither edge is
-# visible to static name resolution, so a component change would leave
-# the composed query's fingerprint unmoved. Chase the string literals.
-# The alias set is checked by tests/test_stale_by_code.py against the
-# package source (round 19: the `_QQ` body-local alias was invisible,
-# leaving docs_neardup_overlap_matrix/docs_decontamination_report/
-# sim_hybrid_rrf unmoved while their components changed).
-_REGISTRY_REF = re.compile(r"(?:_QQ|_Q|QUERIES)\[\s*['\"]([A-Za-z0-9_]+)['\"]\s*\]")
-
-
-def _fingerprint_inputs(name, spec, registry, stack=()) -> list[str]:
-    if name in stack:  # cycle guard (mutual composition)
-        return [f"### cycle:{name}"]
-    parts = _closure_sources(spec.fn)
-    blob = [f"### {k}\n{parts[k]}" for k in sorted(parts)]
-    # the RESOLVED oracle (composed oracles embed component SQL) + tags
-    blob.append(f"### oracle:{name}\n{spec.oracle or ''}")
-    blob.append(f"### tags:{name}\n{tuple(spec.tags or ())!r}")
-    refs = sorted(
-        {m for src in parts.values() for m in _REGISTRY_REF.findall(src)}
-    )
-    for ref in refs:
-        if ref in registry and ref != name:
-            blob.extend(
-                _fingerprint_inputs(ref, registry[ref], registry, stack + (name,))
-            )
-    return blob
-
-
-def query_fingerprint(name, spec, registry) -> str:
-    blob = "\n".join(_fingerprint_inputs(name, spec, registry))
-    return hashlib.sha256(blob.encode()).hexdigest()
-
-
-def head_fingerprints() -> dict[str, str]:
-    import __spark_entry__  # noqa: F401  (registers every query)
-    from mk_kafka_connect_spark.plans.registry import QUERIES
-
-    return {
-        name: query_fingerprint(name, spec, QUERIES)
-        for name, spec in QUERIES.items()
-    }
-
-
-def load_ledger() -> dict:
-    if not os.path.exists(LEDGER):
-        return {}
-    with open(LEDGER) as f:
-        return json.load(f)
-
-
-def drifted(ledger: dict | None = None) -> dict[str, dict]:
-    """Queries whose HEAD fingerprint differs from the ledgered one."""
-    ledger = load_ledger() if ledger is None else ledger
-    head = head_fingerprints()
-    out: dict[str, dict] = {}
-    for name, fp in head.items():
-        row = ledger.get(name)
-        if row is None:
-            out[name] = {"reason": "never-ledgered", "head": fp}
-        elif row["fingerprint"] != fp:
-            out[name] = {
-                "reason": "drifted",
-                "head": fp,
-                "ledgered": row["fingerprint"],
-                "evidence_round": row.get("evidence_round"),
-            }
-    return out
+def _write_ledger(ledger: dict) -> None:
+    with open(FP.LEDGER, "w") as f:
+        json.dump(ledger, f, indent=1, sort_keys=True)
+        f.write("\n")
 
 
 def cmd_bootstrap(round_no: int) -> None:
@@ -291,14 +65,12 @@ def cmd_bootstrap(round_no: int) -> None:
     full-registry strict-parity pass), so 'current code' IS the
     certified code for every query.
     """
-    head = head_fingerprints()
+    head = FP.head_fingerprints()
     ledger = {
         name: {"fingerprint": fp, "evidence_round": round_no}
         for name, fp in sorted(head.items())
     }
-    with open(LEDGER, "w") as f:
-        json.dump(ledger, f, indent=1, sort_keys=True)
-        f.write("\n")
+    _write_ledger(ledger)
     print(f"bootstrapped {len(ledger)} fingerprints at round {round_no}")
 
 
@@ -313,66 +85,84 @@ def cmd_refresh(round_no: int, certified_path: str) -> None:
         and r.get("schema_match")
         and not r.get("err")
     }
-    ledger = load_ledger()
-    head = head_fingerprints()
+    ledger = FP.load_ledger()
+    head = FP.head_fingerprints()
     for name in sorted(green):
         if name in head:
             ledger[name] = {
                 "fingerprint": head[name],
                 "evidence_round": round_no,
             }
-    with open(LEDGER, "w") as f:
-        json.dump(ledger, f, indent=1, sort_keys=True)
-        f.write("\n")
+    _write_ledger(ledger)
     print(f"refreshed {len(green)} fingerprints at round {round_no}")
 
 
-def cmd_rebase(round_no: int, old_path: str) -> None:
+def cmd_rebase(round_no: int, old_path: str) -> dict[str, list[str]]:
     """Re-stamp PURE tracer-coverage flips after a tracer upgrade.
 
     When the fingerprint TRACER itself improves (round 19: function-
     local imports joined the closure), every query whose closure grew
     flips its hash with zero code change. ``--old`` must be the output
-    of ``dump`` run with the UPGRADED tracer inside a git worktree at
-    the commit the evidence round certified. A ledger entry is
-    re-stamped (fingerprint updated, evidence round preserved) ONLY
-    when the old-commit fingerprint equals the HEAD fingerprint — i.e.
-    the full closure, as measured by the new tracer, is byte-identical
-    to what the driver certified. Anything else is genuinely stale and
-    is left for a re-certification seat.
+    of ``dump`` run with the UPGRADED tracer in a checkout of the
+    commit the evidence round certified; a dump from any other tracer
+    is refused. A ledger entry is re-stamped (fingerprint updated,
+    evidence round preserved) ONLY when the old-commit fingerprint
+    equals the HEAD fingerprint — i.e. the full closure, as measured by
+    the new tracer, is byte-identical to what the driver certified.
+    Anything else is genuinely stale and is left for a
+    re-certification seat. Rows of queries no longer registered are
+    reported and left as they are.
     """
     with open(old_path) as f:
-        old = json.load(f)
-    ledger = load_ledger()
-    head = head_fingerprints()
-    restamped, left = [], []
+        dump = json.load(f)
+    tracer = tracer_version()
+    if dump.get("tracer") != tracer:
+        raise SystemExit(
+            f"refusing {old_path}: dumped with tracer {dump.get('tracer')}, "
+            f"HEAD's tracer is {tracer}; re-run dump with HEAD's "
+            f"plans/fingerprints.py"
+        )
+    print(f"dump from commit {dump.get('commit')}")
+    old = dump["fingerprints"]
+    ledger = FP.load_ledger()
+    head = FP.head_fingerprints()
+    restamped, left, unregistered = [], [], []
     for name, row in sorted(ledger.items()):
         if row.get("evidence_round") != round_no:
             continue
-        if row["fingerprint"] == head.get(name):
+        fp = head.get(name)
+        if fp is None:
+            unregistered.append(name)
+        elif row["fingerprint"] == fp:
             continue  # not drifted
-        if old.get(name) == head.get(name):
-            ledger[name] = {"fingerprint": head[name], "evidence_round": round_no}
+        elif old.get(name) == fp:
+            ledger[name] = {"fingerprint": fp, "evidence_round": round_no}
             restamped.append(name)
         else:
             left.append(name)
-    with open(LEDGER, "w") as f:
-        json.dump(ledger, f, indent=1, sort_keys=True)
-        f.write("\n")
+    _write_ledger(ledger)
     print(f"re-stamped {len(restamped)} coverage-only flips at round {round_no}")
     if left:
         print(f"left {len(left)} genuinely stale (need recert seats): {left}")
+    if unregistered:
+        print(f"left {len(unregistered)} rows of unregistered queries: {unregistered}")
+    return {"restamped": restamped, "left": left, "unregistered": unregistered}
 
 
 def cmd_dump(out_path: str) -> None:
+    dump = {
+        "commit": _git_commit(),
+        "tracer": tracer_version(),
+        "fingerprints": FP.head_fingerprints(),
+    }
     with open(out_path, "w") as f:
-        json.dump(head_fingerprints(), f, indent=1, sort_keys=True)
+        json.dump(dump, f, indent=1, sort_keys=True)
         f.write("\n")
     print(f"dumped to {out_path}")
 
 
 def cmd_check() -> int:
-    d = drifted()
+    d = FP.drifted()
     if not d:
         print("clean: every query matches its ledgered fingerprint")
         return 0
